@@ -1103,12 +1103,12 @@ register_phases(
     "and how many rows carry each side of the boundary "
     "(n_valued/n_banded), plus the manifest-recorded column counts at "
     "v0 and HEAD — pinning that every version's manifest carries its "
-    "own schema. The merge path reads touched buckets with "
-    "mergeSchema + typed-null alignment to the manifest schema "
-    "(merge_store._read_aligned), which the schema-evolution "
-    "model-equivalence property test found was load-bearing: a plain "
-    "read could adopt a pre-evolution file schema and silently drop "
-    "evolved columns from the rewrite. Scale: evolution is "
+    "own schema. The merge path reads touched buckets with the "
+    "manifest's recorded schema, typed nulls for columns a "
+    "pre-evolution dir lacks (merge_store._read_aligned), which the "
+    "schema-evolution model-equivalence property test found was "
+    "load-bearing: a read adopting a pre-evolution file schema would "
+    "silently drop evolved columns from the rewrite. Scale: evolution is "
     "metadata+touched-buckets only — a new column on a 100 TB table "
     "costs the batch's buckets, never a table rewrite. "
     "sources/merge_store.py merge allow_schema_evolution; "

@@ -189,6 +189,73 @@ def apply_where_ranges(df: DataFrame, where: dict | None) -> DataFrame:
     return df
 
 
+def schema_ddl(cols, types: dict[str, str], extra: str = "") -> str:
+    """Explicit read schema for ``cols`` from a name → simpleString
+    type map (plus ``extra`` DDL appended, e.g. an op column). Every
+    store scan reads with one: Spark then runs no footer-inference job,
+    and a column a file predates (an older dir of an evolved table)
+    reads as a NULL of its real type."""
+    missing = [c for c in cols if c not in types]
+    if missing:
+        raise ValueError(f"no recorded type for column(s) {missing}")
+    ddl = ", ".join(f"`{c}` {types[c]}" for c in cols)
+    return f"{ddl}, {extra}" if extra else ddl
+
+
+def footer_types(dirs, want) -> dict[str, str]:
+    """name → simpleString type map unioned over the parquet footers
+    of ``dirs`` (one file per dir, until ``want`` is covered): a
+    driver-side pyarrow pass, no Spark job. After an evolution only
+    rewritten dirs carry a new column, so one footer is not enough."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    want = set(want)
+    types: dict[str, str] = {}
+    for d in dirs:
+        if not os.path.isdir(d):
+            continue
+        name = next(
+            (f for f in sorted(os.listdir(d)) if f.endswith(".parquet")),
+            None,
+        )
+        if name is None:
+            continue
+        sch = pq.ParquetFile(os.path.join(d, name)).schema_arrow
+        for fname in sch.names:
+            # prefer_timestamp_ntz: a parquet timestamp with
+            # isAdjustedToUTC=false arrives as a tz-less arrow type and
+            # reads back in Spark as timestamp_ntz
+            types.setdefault(
+                fname,
+                from_arrow_type(
+                    sch.field(fname).type, prefer_timestamp_ntz=True
+                ).simpleString(),
+            )
+        if want <= set(types):
+            break
+    return types
+
+
+# a re-typed column keeps the wider type of a widening chain (every
+# dir then reads under it); any other change takes the written type
+_WIDENING = (("tinyint", "smallint", "int", "bigint"), ("float", "double"))
+
+
+def _wider(old: str | None, new: str) -> str:
+    chain = next((c for c in _WIDENING if old in c and new in c), None)
+    return max(old, new, key=chain.index) if chain else new
+
+
+def _simple_types(df: DataFrame, cols) -> dict[str, str]:
+    """simpleString types of ``df``'s ``cols`` — what a commit wrote."""
+    return {
+        f.name: f.dataType.simpleString()
+        for f in df.schema.fields
+        if f.name in cols
+    }
+
+
 def _writer_token() -> str:
     """Unique per-commit-attempt suffix for data/changes/dv dir names.
 
@@ -326,12 +393,6 @@ class ParquetMergeStore:
         # because __init__ has no SparkSession).
         self.constraints: dict[str, str] = dict(constraints or {})
         self._pending_constraint_validation: dict[str, str] = {}
-        # probe()'s stored-PK-type lookup, cached per version: a
-        # committed version's schema is immutable, and probe is the
-        # per-micro-batch admission path of all three streaming
-        # appliers — without the cache every batch re-reads a bucket
-        # footer just to learn types that can never change
-        self._pk_types_by_version: dict[int, dict] = {}
         os.makedirs(root, exist_ok=True)
         # reopening an existing store with different bucketing/key config
         # would silently route the same PK to a different bucket: the old
@@ -397,12 +458,38 @@ class ParquetMergeStore:
     def _read_manifest(self, version: int) -> dict:
         return _load_manifest(self._manifest_path(version))
 
+    def column_types(self, version: int) -> dict[str, str]:
+        """column → Spark simpleString type at ``version``, in column
+        order: the manifest's recorded map, with any column it lacks
+        (a manifest written before the map was recorded) filled from
+        the bucket-dir footers on the driver — no Spark job either
+        way. The one type lookup both stores read with."""
+        m = self._read_manifest(version)
+        cols = m["columns"]
+        types = dict(m.get("types") or {})
+        missing = set(cols) - set(types)
+        if missing:
+            dirs = [
+                os.path.join(self.root, p)
+                for p in sorted(set(m["bucket_paths"].values()))
+            ]
+            types = {**footer_types(dirs, missing), **types}
+        return {c: types[c] for c in cols if c in types}
+
+    def _ddl(self, version: int, extra: str = "") -> str:
+        """Explicit read schema of the table at ``version``."""
+        return schema_ddl(
+            self._read_manifest(version)["columns"],
+            self.column_types(version),
+            extra,
+        )
+
     def _evolved_flag(self, version: int, columns: list[str]) -> bool:
         """Sticky schema-evolution marker for a commit at ``version``.
 
         True once any committed column set differs from its
         predecessor's; a manifest predating the flag reads as True
-        (conservative: the slow-but-always-correct mergeSchema path).
+        (conservative: the table may hold mixed-schema dirs).
         """
         if version == 0:
             return False
@@ -427,9 +514,21 @@ class ParquetMergeStore:
         file_stats: dict[int, dict] | None = None,
         dv: dict[int, str] | None = None,
         evolved: bool | None = None,
+        types: dict[str, str] | None = None,
     ) -> int:
         vdir = os.path.join(self.root, f"v{version:05d}")
         os.makedirs(vdir, exist_ok=True)
+        # the predecessor's type map carried forward, unioned with the
+        # types of what this commit wrote (a new column's type comes
+        # from its introducing commit; a re-typed one keeps the wider)
+        recorded: dict[str, str] = {}
+        if version > 0:
+            try:
+                recorded = self.column_types(version - 1)
+            except (FileNotFoundError, ValueError):
+                recorded = {}
+        for c, t in (types or {}).items():
+            recorded[c] = _wider(recorded.get(c), t)
         manifest = {
             "version": version,
             "keys": list(self.keys),
@@ -444,18 +543,20 @@ class ParquetMergeStore:
             # from different versions may carry different physical
             # schemas after an evolution — this is the authoritative set
             "columns": columns,
+            # column → Spark simpleString type (the MOR log's form):
+            # every scan reads its dirs with this explicit schema — no
+            # footer-inference job, and a column an older dir predates
+            # reads as a typed NULL (see column_types for manifests
+            # written before the map existed)
+            "types": {c: recorded[c] for c in columns if c in recorded},
             # STICKY evolution marker: False until some commit changes
             # the column set, True from then on (even through restores —
             # old-schema dirs may stay referenced until every bucket
-            # rewrites). Readers use it to skip the mergeSchema footer
-            # union — a per-file cost that's pure waste on the
-            # overwhelmingly common never-evolved table — and read
-            # bucket dirs with the writer-declared schema directly.
+            # rewrites). The partitioned store's fused scans fuse only
+            # never-evolved children.
             # ``evolved`` overrides the derived flag: a CLONE's v0 must
             # inherit the SOURCE manifest's flag (the predecessor chain
-            # the derivation walks does not exist in the clone, and a
-            # False flag over an evolved source's mixed-schema dirs
-            # would take the no-mergeSchema fast path and mis-read).
+            # the derivation walks does not exist in the clone).
             "evolved": (
                 self._evolved_flag(version, columns)
                 if evolved is None
@@ -640,6 +741,11 @@ class ParquetMergeStore:
         rebased["evolved"] = bool(manifest["evolved"]) or bool(
             head_m.get("evolved", True)
         )
+        head_types = head_m.get("types", {})
+        rebased["types"] = {
+            c: _wider(head_types.get(c), t)
+            for c, t in manifest["types"].items()
+        }
         rebased["op_params"] = {
             **manifest["op_params"],
             # multi-level recursion must keep the ORIGINAL pre-race
@@ -797,11 +903,13 @@ class ParquetMergeStore:
         if not entries:
             return df
         dv = (
-            spark.read.parquet(
-                *[
+            self._read_keys(
+                spark,
+                [
                     os.path.join(self.root, rel)
                     for rel in sorted(set(entries.values()))
-                ]
+                ],
+                version,
             )
             .select(
                 *[F.col(k).alias(f"__dv_{k}") for k in self.keys]
@@ -814,6 +922,14 @@ class ParquetMergeStore:
         # vectors are small by design (deleted PKs, not rows):
         # broadcast so the anti-join never shuffles the data side
         return df.join(F.broadcast(dv), cond, "left_anti")
+
+    def _read_keys(
+        self, spark: SparkSession, dirs: list[str], version: int
+    ) -> DataFrame:
+        """PK-only read of deletion-vector dirs, typed at ``version``."""
+        return spark.read.schema(
+            schema_ddl(self.keys, self.column_types(version))
+        ).parquet(*dirs)
 
     def _dv_count(self, version: int) -> int:
         """Footer row count over the version's DV entries (each DV dir
@@ -916,10 +1032,21 @@ class ParquetMergeStore:
         parts = []
         all_cols: list[str] = []
         for tag in sorted(live):
-            df = spark.read.parquet(live[tag])
-            cols = [c for c in bloom_cols if c in df.columns]
+            d = live[tag]
+            types = footer_types(
+                [
+                    os.path.join(d, e)
+                    for e in sorted(os.listdir(d))
+                    if e.startswith(f"{_BUCKET}=")
+                ],
+                bloom_cols,
+            )
+            cols = [c for c in bloom_cols if c in types]
             if not cols:
                 continue
+            df = spark.read.schema(
+                schema_ddl(cols, types, f"`{_BUCKET}` int")
+            ).parquet(d)
             for c in cols:
                 if c not in all_cols:
                     all_cols.append(c)
@@ -1246,50 +1373,17 @@ class ParquetMergeStore:
     def _read_aligned(
         self, spark: SparkSession, paths: list[str], version: int
     ) -> DataFrame:
-        """mergeSchema read of bucket dirs, aligned to the manifest's
-        authoritative column order with TYPED null backfill.
+        """Read bucket dirs with the manifest's recorded schema: the
+        manifest's column order and types, passed to the reader.
 
-        After a schema evolution, dirs written earlier lack the new
-        columns. The footer union usually supplies them, but a read
-        restricted to ONLY pre-evolution dirs (pruned read, or a merge
-        touching only old buckets) must still present the manifest's
-        schema — with nulls of the column's REAL type (an untyped
-        NullType would reach the parquet writer on the next rewrite,
-        which rejects void). Types come from the full-snapshot footer
-        union, which always covers every manifest column: the column's
-        introducing commit wrote it, and every later rewrite preserves
-        it. Footer-only work; no data scan.
+        No footer-inference job runs, and after a schema evolution a
+        dir written earlier presents each column it lacks as a NULL of
+        the column's REAL type — a read restricted to ONLY
+        pre-evolution dirs (pruned read, or a merge touching only old
+        buckets) still has the manifest's schema, and an untyped
+        NullType never reaches the parquet writer on the next rewrite.
         """
-        m = self._read_manifest(version)
-        cols = m["columns"]
-        if not m.get("evolved", True):
-            # never-evolved table (the overwhelmingly common case):
-            # every referenced dir carries exactly the manifest schema,
-            # so the mergeSchema footer union — a per-FILE cost — buys
-            # nothing; read with the writer-declared schema directly
-            return spark.read.parquet(*paths).select(*cols)
-        df = spark.read.option("mergeSchema", "true").parquet(*paths)
-        missing = [c for c in cols if c not in df.columns]
-        if not missing:
-            return df.select(*cols)
-        all_paths = sorted(
-            os.path.join(self.root, p)
-            for p in set(self._bucket_paths(version).values())
-        )
-        types = {
-            f.name: f.dataType
-            for f in spark.read.option("mergeSchema", "true")
-            .parquet(*all_paths)
-            .schema
-        }
-        return df.select(
-            *[
-                F.col(c)
-                if c in df.columns
-                else F.lit(None).cast(types[c]).alias(c)
-                for c in cols
-            ]
-        )
+        return spark.read.schema(self._ddl(version)).parquet(*paths)
 
     def read(
         self,
@@ -1344,11 +1438,8 @@ class ParquetMergeStore:
         # expired snapshot must fail up front with the descriptive
         # error, not die mid-scan with a parquet path error
         self._guard_vacuumed(paths, v)
-        # mergeSchema + typed alignment: after a schema evolution,
-        # buckets written before it lack the new columns — union the
-        # footers, backfill typed nulls when the pruned subset predates
-        # the evolution entirely, and present the manifest's
-        # authoritative column order
+        # the recorded schema: buckets written before an evolution
+        # read the columns they lack as typed nulls
         df = self._read_aligned(spark, paths, v)
         # deletion vectors: soft-deleted PKs anti-join out
         df = self._apply_dv(spark, df, v)
@@ -1398,24 +1489,12 @@ class ParquetMergeStore:
                 f"store at {self.root} has no data buckets at v{v}; "
                 "nothing to probe"
             )
-        # stored PK types, cached per version (immutable once
-        # committed; PK columns never retype under schema evolution) —
-        # first probe of a version reads one dir's footer (schema-only,
-        # no scan), later probes skip the driver I/O entirely
-        stored = self._pk_types_by_version.get(v)
-        if stored is None:
-            schema_dir = [
-                os.path.join(self.root, p)
-                for p in sorted(set(paths.values()))[:1]
-            ]
-            self._guard_vacuumed(schema_dir, v)
-            stored = {
-                f.name: f.dataType
-                for f in self._read_aligned(spark, schema_dir, v).schema
-                if f.name in self.keys
-            }
-            self._pk_types_by_version[v] = stored
-        in_types = {f.name: f.dataType for f in keys_df.schema.fields}
+        # probe keys cast to the stored PK types (recorded in the
+        # manifest; PK columns never retype under schema evolution)
+        stored = self.column_types(v)
+        in_types = {
+            f.name: f.dataType.simpleString() for f in keys_df.schema.fields
+        }
         keys = keys_df.select(
             *[
                 F.col(c).cast(stored[c]).alias(c)
@@ -1753,6 +1832,7 @@ class ParquetMergeStore:
             "touched": touched,
             "prior": prior,
             "columns": columns,
+            "types": _simple_types(combined, columns),
             "cur_version": cur_version,
             "conditional": conditional,
             "allow_schema_evolution": allow_schema_evolution,
@@ -1810,6 +1890,7 @@ class ParquetMergeStore:
             },
             file_stats=self._prior_file_stats(cur_version, touched),
             dv=self._prior_dv(cur_version, touched),
+            types=pending["types"],
         )
 
     @scoped_store_op("source")
@@ -2204,6 +2285,7 @@ class ParquetMergeStore:
             },
             file_stats=self._prior_file_stats(cur_version, touched),
             dv=self._prior_dv(cur_version, touched),
+            types=_simple_types(out, cols),
         )
 
     @scoped_store_op("keys_df")
@@ -2292,10 +2374,8 @@ class ParquetMergeStore:
         # merge_into's no-target branch casts t to the source struct —
         # NullType columns would then reach the parquet writer, which
         # rejects void, instead of the documented unknown-keys-are-no-ops
-        # commit. Schema-only read: no data scan.
-        types = {
-            f.name: f.dataType for f in self.read(spark, version=cur).schema
-        }
+        # commit.
+        types = self.column_types(cur)
         widened = keys_df.select(
             *[
                 F.col(c)
@@ -2494,6 +2574,7 @@ class ParquetMergeStore:
             },
             file_stats=self._prior_file_stats(cur, touched),
             dv=self._prior_dv(cur, touched),
+            types=_simple_types(keep, cols),
         )
 
     def _delete_via_dv(
@@ -2570,7 +2651,7 @@ class ParquetMergeStore:
         ]
         if old_touched_dirs:
             new_keys = new_keys.unionByName(
-                spark.read.parquet(*old_touched_dirs).select(*self.keys)
+                self._read_keys(spark, old_touched_dirs, cur)
             )
         rel_dv = os.path.join("dv", f"v{new_version:05d}-{_writer_token()}")
         out_dir = os.path.join(self.root, rel_dv)
@@ -2679,6 +2760,7 @@ class ParquetMergeStore:
                 "write_change_feed=True or diff snapshots with "
                 "changes_between"
             )
+        reader = spark.read.schema(self._feed_ddl(v))
         if isinstance(rel, list):
             # multi-commit publish (round 13): the refs are the
             # branch's per-commit feeds in version order; tag each
@@ -2698,33 +2780,30 @@ class ParquetMergeStore:
                         "_commit_version", F.lit(0).cast("bigint")
                     )
                 )
+            # a branch evolution between feed-bearing commits leaves
+            # earlier feeds narrower: the published schema reads their
+            # missing columns as typed nulls
             parts = [
-                spark.read.parquet(
-                    os.path.join(self.root, r)
-                ).withColumn(
+                reader.parquet(os.path.join(self.root, r)).withColumn(
                     "_commit_version", F.lit(i + 1).cast("bigint")
                 )
                 for i, r in enumerate(rel)
             ]
             # balanced fold (the _delta_frame law: O(n log n) driver
-            # analysis, not a left-deep chain) with missing columns
-            # null-filled — a branch evolution between feed-bearing
-            # commits leaves earlier feeds narrower; the head commit's
-            # feed always carries the published column set
+            # analysis, not a left-deep chain)
             while len(parts) > 1:
                 parts = [
-                    parts[i].unionByName(
-                        parts[i + 1], allowMissingColumns=True
-                    )
+                    parts[i].unionByName(parts[i + 1])
                     if i + 1 < len(parts)
                     else parts[i]
                     for i in range(0, len(parts), 2)
                 ]
-            return parts[0].select(
-                *m["columns"], "_change_type", "_commit_version"
-            )
-        df = spark.read.parquet(os.path.join(self.root, rel))
-        return df.select(*m["columns"], "_change_type")
+            return parts[0]
+        return reader.parquet(os.path.join(self.root, rel))
+
+    def _feed_ddl(self, version: int) -> str:
+        """Read schema of a stored change feed at ``version``."""
+        return self._ddl(version, "`_change_type` string")
 
     @scoped_store_op(None, "spark")
     def rebucket(self, spark: SparkSession, new_num_buckets: int) -> int:
@@ -2782,6 +2861,7 @@ class ParquetMergeStore:
                 blooms=blooms,
                 operation="rebucket",
                 op_params={"from": old_b, "to": new_b},
+                types=_simple_types(snapshot, cols),
             )
         except BaseException:
             self.num_buckets = old_b
@@ -3038,6 +3118,7 @@ class ParquetMergeStore:
             },
             file_stats=file_stats,
             dv=self._prior_dv(cur_version, rewrite),
+            types=_simple_types(df, cols),
         )
 
     def restore(self, target_version: int) -> int:
@@ -3113,6 +3194,7 @@ class ParquetMergeStore:
                     for k, v in m.get("file_stats", {}).items()
                 },
                 dv={int(k): v for k, v in m.get("dv", {}).items()},
+                types=self.column_types(target_version),
             )
         except BaseException:
             self.num_buckets = old_b
@@ -3321,6 +3403,7 @@ class ParquetMergeStore:
             # fewer physical columns, and _evolved_flag(0, ...) would
             # wrongly report False (clones have no predecessor chain)
             evolved=bool(m.get("evolved", True)),
+            types=self.column_types(cur),
         )
         return clone
 
@@ -3535,6 +3618,7 @@ class ParquetMergeStore:
             # derivation cannot see the branch's intermediate commits)
             evolved=bool(bm.get("evolved", True))
             or self._evolved_flag(cur + 1, list(bm["columns"])),
+            types=branch.column_types(bcur),
         )
 
     def wap_abandon(
@@ -3871,9 +3955,8 @@ def stream_change_feed(
     resumes after the last consumed commit — at-least-once per file,
     exactly-once with an idempotent sink such as
     ``replay_change_feed``'s upsert/delete pair or foreachBatch into a
-    second store). Requires at least one stored feed to exist: the
-    file source needs a static schema, which is read from the feeds on
-    disk.
+    second store). Requires at least one stored feed to exist. The
+    file source's static schema is the head manifest's recorded one.
 
     Downstream gets (table columns…, _change_type) rows in commit
     order per micro-batch — the O(Δ) signal an always-on incremental
@@ -3891,10 +3974,12 @@ def stream_change_feed(
             f"no stored change feeds under {changes_root}; merge with "
             "write_change_feed=True first"
         )
-    schema = spark.read.parquet(
-        os.path.join(changes_root, versions[0])
-    ).schema
-    reader = spark.readStream.schema(schema)
+    # the head's recorded schema: a feed written before a schema
+    # evolution reads the columns it lacks as typed nulls, and a column
+    # added later is never dropped from the stream
+    reader = spark.readStream.schema(
+        store._feed_ddl(store.current_version())
+    )
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(os.path.join(changes_root, "*"))
@@ -4108,14 +4193,6 @@ def changes_between(
         changed = [b for b in changed if b in surviving]
     cols = store._read_manifest(v_to)["columns"]
 
-    def _residual(df: DataFrame) -> DataFrame:
-        for col, (lo, hi) in (where or {}).items():
-            if lo is not None:
-                df = df.filter(F.col(col) >= F.lit(lo))
-            if hi is not None:
-                df = df.filter(F.col(col) <= F.lit(hi))
-        return df
-
     if not changed and not changed_old:
         return store.read(spark, v_to).select(*cols).limit(0).withColumn(
             "_change_type", F.lit("insert")
@@ -4129,47 +4206,23 @@ def changes_between(
         ]
         if not present:
             return None
-        # never-evolved table: skip the per-file mergeSchema footer
-        # union (same fast path as _read_aligned; the sticky flag at
-        # the NEWER endpoint covers both sides' dirs — on a backward
-        # span v_from is the newer, possibly-evolved one)
-        if store._read_manifest(max(v_from, v_to)).get("evolved", True):
-            df = spark.read.option("mergeSchema", "true").parquet(*present)
-        else:
-            df = spark.read.parquet(*present)
+        # both sides read with the v_to schema: columns an older dir
+        # lacks read as TYPED nulls, so a consumer replaying the feed
+        # into another store never hands the parquet writer a void
+        # column
+        df = store._read_aligned(spark, present, v_to)
         # that version's deletion vectors: soft-deleted rows are not
         # part of the snapshot this side represents
         return store._apply_dv(spark, df, version, buckets=buckets)
-
-    def _align(df: DataFrame) -> DataFrame:
-        # evolved schemas: columns missing from these footers read null
-        # — TYPED (from the v_to snapshot, which covers every column)
-        # so a consumer replaying the feed into another store never
-        # hands the parquet writer a void column
-        missing = [c for c in cols if c not in df.columns]
-        if not missing:
-            return df.select(*cols)
-        types = {
-            f.name: f.dataType for f in store.read(spark, v_to).schema
-        }
-        return df.select(
-            *[
-                F.col(c)
-                if c in df.columns
-                else F.lit(None).cast(types[c]).alias(c)
-                for c in cols
-            ]
-        )
 
     new = _read(new_paths, changed, v_to)
     old = _read(old_paths, changed_old, v_from)
     keys = list(store.keys)
     if old is None:
         return classify_changes(
-            None, _residual(_align(new)), None, cols, keys,
+            None, apply_where_ranges(new, where), None, cols, keys,
             include_preimages,
         )
-    old = _align(old)
 
     # deletes: keys live at v_from whose row is GONE at v_to — only a
     # DELETE commit produces them. A key's bucket id under v_to may
@@ -4207,7 +4260,7 @@ def changes_between(
     if presence is None:
         gone = old
     else:
-        pres_keys = _align(presence).select(
+        pres_keys = presence.select(
             *[F.col(k).alias(f"__new_{k}") for k in keys]
         )
         gone = old.join(
@@ -4216,7 +4269,7 @@ def changes_between(
             "left_anti",
         )
     # deletes qualify a `where` range by their only image — the old row
-    gone = _residual(gone)
+    gone = apply_where_ranges(gone, where)
 
     if new is None:
         # no changed NEW dirs: the span's only candidates are deletes
@@ -4228,5 +4281,6 @@ def changes_between(
     # the left join); the classification law itself is the shared
     # Delta-CDF classifier both stores call (sources/cdc.py)
     return classify_changes(
-        old, _residual(_align(new)), gone, cols, keys, include_preimages
+        old, apply_where_ranges(new, where), gone, cols, keys,
+        include_preimages,
     )

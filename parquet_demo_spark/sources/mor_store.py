@@ -71,6 +71,7 @@ from parquet_demo_spark.sources.merge_store import (
     ConcurrentWriteConflict,
     ParquetMergeStore,
     apply_where_ranges,
+    schema_ddl,
 )
 from parquet_demo_spark.sources.mongo import collapse_for_upsert
 from parquet_demo_spark.tuning import scoped_store_op
@@ -489,6 +490,7 @@ class MergeOnReadStore:
                 batch.sparkSession,
                 d,
                 out_cols,
+                out_types,
                 obs["entry"] if obs["entry"] >= 0 else None,
             )
         new = self._commit_log(
@@ -525,6 +527,7 @@ class MergeOnReadStore:
         spark: SparkSession,
         delta_dir: str,
         cols: list[str],
+        types: dict[str, str],
         version: int | None,
     ) -> str:
         """Write the Delta-CDF rows of the delta batch in ``delta_dir``
@@ -533,7 +536,9 @@ class MergeOnReadStore:
         returns the root-relative ref the log entry records. ONE
         bucket-pruned probe resolves the pre-images; the classification
         is the shared classifier (sources/cdc.py)."""
-        delta = spark.read.parquet(delta_dir)
+        delta = spark.read.schema(
+            schema_ddl(cols, types, f"`{_OP}` string")
+        ).parquet(delta_dir)
         keys = list(self.keys)
         has_state = self._log()["entry"] >= 0 or (
             self.base.current_version() is not None
@@ -601,55 +606,12 @@ class MergeOnReadStore:
                 f"log entry {v}'s stored change feed was removed by "
                 "vacuum(keep_last=...)"
             )
-        cols = state.get("columns") or self._columns()
-        return spark.read.parquet(p).select(*cols, "_change_type")
+        cols, types = self._state_schema(state)
+        return spark.read.schema(
+            schema_ddl(cols, types, "`_change_type` string")
+        ).parquet(p)
 
     # --- read path ---
-
-    def _base_types(self, version: int) -> dict[str, str]:
-        """name → simpleString type map of the base at ``version``,
-        unioned across bucket-dir footers (after a schema evolution
-        only the touched buckets carry the new column — one footer is
-        not enough). Cached keyed BY VERSION: a bootstrap merge that
-        evolves the base invalidates the cache naturally."""
-        cached = getattr(self, "_base_types_cache", None)
-        if cached is not None and cached[0] == version:
-            return cached[1]
-        import pyarrow.parquet as pq
-
-        from pyspark.sql.pandas.types import from_arrow_type
-
-        want = set(self.base._read_manifest(version)["columns"])
-        types: dict[str, str] = {}
-        for rel in sorted(set(self.base._bucket_paths(version).values())):
-            d = os.path.join(self.base.root, rel)
-            name = next(
-                (
-                    f
-                    for f in sorted(os.listdir(d))
-                    if f.endswith(".parquet")
-                ),
-                None,
-            )
-            if name is None:
-                continue
-            sch = pq.ParquetFile(os.path.join(d, name)).schema_arrow
-            for fname in sch.names:
-                # prefer_timestamp_ntz: a parquet timestamp with
-                # isAdjustedToUTC=false arrives as a tz-less arrow type
-                # and reads back in Spark as timestamp_ntz — mapping it
-                # to TimestampType here would flag every NTZ batch as
-                # drifted
-                types.setdefault(
-                    fname,
-                    from_arrow_type(
-                        sch.field(fname).type, prefer_timestamp_ntz=True
-                    ).simpleString(),
-                )
-            if want <= set(types):
-                break
-        self._base_types_cache = (version, types)
-        return types
 
     def _schema_record(self) -> tuple[list[str], dict[str, str]] | None:
         """(column order, name → simpleString type).
@@ -672,8 +634,7 @@ class MergeOnReadStore:
                 return list(log["columns"]), dict(log["types"])
             return None
         cols = list(self.base._read_manifest(cur)["columns"])
-        types = self._base_types(cur)
-        return cols, {c: types[c] for c in cols if c in types}
+        return cols, self.base.column_types(cur)
 
     def _columns(self) -> list[str] | None:
         """Table column order (see :meth:`_schema_record`)."""
@@ -694,41 +655,45 @@ class MergeOnReadStore:
         """Typed empty snapshot from the recorded schema — what read()
         returns when every key has been deleted and the log compacted
         away (an initialized-but-empty store must stay readable)."""
-        cols, types = self._schema_record()
-        untyped = [c for c in cols if c not in types]
-        if untyped:
-            raise ValueError(
-                f"store at {self.root} records no type for column(s) "
-                f"{untyped}: its data is fully deleted and no bucket "
-                "footer or log entry carries them — commit a delta "
-                "batch with the full schema to re-establish the record"
-            )
-        return spark.createDataFrame(
-            [], ", ".join(f"`{c}` {types[c]}" for c in cols)
-        )
+        return spark.createDataFrame([], schema_ddl(*self._schema_record()))
+
+    def _state_schema(self, state: dict) -> tuple[list[str], dict]:
+        """(column order, types) of a log state's rows: the entry's
+        record (backfilled for a legacy entry, see
+        :meth:`_null_fill_types`)."""
+        cols = list(state.get("columns") or self._columns())
+        return cols, self._null_fill_types(state, cols)
 
     def _delta_frame(
-        self, spark: SparkSession, dirs: list[str] | None = None
+        self,
+        spark: SparkSession,
+        state: dict | None = None,
+        dirs: list[str] | None = None,
     ) -> DataFrame | None:
-        """Live delta rows, each tagged with its commit's POSITION in
-        the log (``__seq``): the committed dirs order IS the total
-        write order, so sequence comes from the log — never from data
-        files (a CAS-losing rebased append would otherwise carry a
-        stale embedded number). ``dirs`` pins an explicit snapshot of
-        the log (compact() MUST pass the same list it later truncates
-        — a second read would race a concurrent append). The union is
+        """Live delta rows of log ``state`` (default: the committed
+        head), each tagged with its commit's POSITION in the log
+        (``__seq``): the committed dirs order IS the total write
+        order, so sequence comes from the log — never from data files
+        (a CAS-losing rebased append would otherwise carry a stale
+        embedded number; the recorded read schema never reads one).
+        ``dirs`` (default: the state's) restricts the frame to a
+        suffix of the log, read with the state's schema. The union is
         a balanced tree (O(D log D) driver analysis, not the O(D²)
         left-deep chain), bounded by compaction cadence either way."""
-        if dirs is None:
-            dirs = self._log()["dirs"]
+        state = self._log() if state is None else state
+        dirs = list(state["dirs"]) if dirs is None else dirs
         if not dirs:
             return None
-        frames = []
-        for i, d in enumerate(dirs):
-            df = spark.read.parquet(os.path.join(self._deltas_root, d))
-            if _SEQ in df.columns:  # legacy log: embedded commit seq
-                df = df.drop(_SEQ)
-            frames.append(df.withColumn(_SEQ, F.lit(i).cast("bigint")))
+        cols, types = self._state_schema(state)
+        reader = spark.read.schema(
+            schema_ddl(cols, types, f"`{_OP}` string")
+        )
+        frames = [
+            reader.parquet(os.path.join(self._deltas_root, d)).withColumn(
+                _SEQ, F.lit(i).cast("bigint")
+            )
+            for i, d in enumerate(dirs)
+        ]
         while len(frames) > 1:
             frames = [
                 frames[i].unionByName(frames[i + 1])
@@ -739,12 +704,15 @@ class MergeOnReadStore:
         return frames[0]
 
     def _resolved(
-        self, spark: SparkSession, dirs: list[str] | None = None
+        self, spark: SparkSession, state: dict | None = None
     ) -> DataFrame | None:
-        """Latest delta action per PK: highest __seq wins (PKs are
-        unique within a batch after the commit-side collapse, so the
-        sequence alone is a total order per key)."""
-        dl = self._delta_frame(spark, dirs)
+        """Latest delta action per PK of log ``state`` (default: the
+        committed head): highest __seq wins (PKs are unique within a
+        batch after the commit-side collapse, so the sequence alone is
+        a total order per key). compact() MUST pass the same snapshot
+        it later truncates — a second log read would race a
+        concurrent append."""
+        dl = self._delta_frame(spark, state)
         if dl is None:
             return None
         w = Window.partitionBy(*self.keys).orderBy(F.col(_SEQ).desc())
@@ -758,18 +726,17 @@ class MergeOnReadStore:
         self,
         spark: SparkSession,
         base_df: DataFrame | None,
-        dirs: list[str] | None = None,
-        cols: list[str] | None = None,
+        state: dict,
         where: dict | None = None,
     ) -> DataFrame:
-        latest = self._resolved(spark, dirs)
-        cols = self._columns() if cols is None else cols
+        latest = self._resolved(spark, state)
         if latest is None:
             if base_df is None:
                 if self._schema_record() is not None:
                     return self._empty_frame(spark)  # emptied, not unborn
                 raise ValueError(f"empty merge-on-read store: {self.root}")
             return base_df
+        cols = state.get("columns") or self._columns()
         ups = latest.filter(F.col(_OP) == "u").select(*cols)
         if where:
             # the base side arrives already where-filtered (exact, via
@@ -818,13 +785,7 @@ class MergeOnReadStore:
             if bv is not None
             else None
         )
-        return self._overlay(
-            spark,
-            base_df,
-            dirs=list(state["dirs"]),
-            cols=state.get("columns") or self._columns(),
-            where=where,
-        )
+        return self._overlay(spark, base_df, state, where=where)
 
     def probe(
         self,
@@ -853,7 +814,7 @@ class MergeOnReadStore:
             if "base_version" in state
             else self.base.current_version()
         )
-        latest = self._resolved(spark, list(state["dirs"]))
+        latest = self._resolved(spark, state)
         keys = keys_df.select(*self.keys).dropDuplicates()
         base_hits = (
             self.base.probe(spark, keys, version=cur, buckets=buckets)
@@ -1155,7 +1116,7 @@ class MergeOnReadStore:
             # touch resolves at e_to from these dirs (they carry the
             # highest log positions), so they are exactly the
             # candidate set and its post-state
-            dl = self._delta_frame(spark, new_dirs)
+            dl = self._delta_frame(spark, s_to, new_dirs)
             w = Window.partitionBy(*keys).orderBy(F.col(_SEQ).desc())
             latest = (
                 dl.withColumn("__rn", F.row_number().over(w))
@@ -1257,7 +1218,7 @@ class MergeOnReadStore:
         # without ever reaching the base (round-11 review finding)
         snap = self._log()
         folded_dirs = list(snap["dirs"])
-        latest = self._resolved(spark, folded_dirs)
+        latest = self._resolved(spark, snap)
         if latest is None:
             return
         pinned_present = "base_version" in snap

@@ -78,6 +78,7 @@ from pyspark.sql import functions as F
 from parquet_demo_spark.sources.merge_store import (
     ConcurrentWriteConflict,
     ParquetMergeStore,
+    schema_ddl,
 )
 from parquet_demo_spark.tuning import scoped_store_op
 
@@ -1035,6 +1036,9 @@ class PartitionedParquetMergeStore:
                 "partition-value rendering drifted"
             )
 
+        # each child reads ITS slice with the batch's own schema
+        slice_reader = spark.read.schema(upserts.schema)
+
         def _prepare_one(pval: str):
             dirname = dirnames[pval]
             child = (
@@ -1043,7 +1047,7 @@ class PartitionedParquetMergeStore:
                 else self._child(dirname)
             )
             pend = child._merge_prepare(
-                spark.read.parquet(slices[pval]).select(*upserts.columns),
+                slice_reader.parquet(slices[pval]),
                 write_change_feed=write_change_feed,
                 conditional=conditional,
                 allow_schema_evolution=allow_schema_evolution,
@@ -1070,7 +1074,7 @@ class PartitionedParquetMergeStore:
                 else self._child(dirnames[pval])
             )
             child.commit_delta(
-                spark.read.parquet(slices[pval]).select(*upserts.columns),
+                slice_reader.parquet(slices[pval]),
                 write_change_feed=write_change_feed,
             )
             return {
@@ -1778,13 +1782,12 @@ class PartitionedParquetMergeStore:
 
         A child is era-eligible when its pinned manifest lets a bare
         multi-dir scan reproduce its ``read()`` exactly: never evolved
-        (every referenced dir carries the declared schema — the same
-        condition the child's own no-mergeSchema fast path keys on),
-        no live deletion vectors (nothing to anti-join), and all its
+        (every referenced dir carries the declared schema), no live
+        deletion vectors (nothing to anti-join), and all its
         dirs still on disk (a vacuumed child routes to the slow path
         for the descriptive expired-version error). Eligible children
-        group by their manifest column tuple — the schema era — and
-        each era becomes one ``spark.read.parquet(*dirs)``; stragglers
+        group by their recorded column/type map — the schema era — and
+        each era becomes one multi-dir scan with that schema; stragglers
         return as the slow list for ordinary per-child reads. Driver
         cost: one manifest JSON per child (metadata), one plan per ERA
         (eras are ~1-2 in practice), instead of one analyzed plan per
@@ -1821,10 +1824,15 @@ class PartitionedParquetMergeStore:
             if not all(os.path.isdir(d) for d in dirs):
                 slow.append(pval)
                 continue
-            eras.setdefault(tuple(m["columns"]), []).extend(dirs)
+            types = self._child(e["dir"]).column_types(int(e["version"]))
+            eras.setdefault(
+                tuple((c, types[c]) for c in m["columns"]), []
+            ).extend(dirs)
         frames = [
-            spark.read.parquet(*sorted(dirs)).select(*cols)
-            for cols, dirs in sorted(eras.items())
+            spark.read.schema(
+                schema_ddl([c for c, _ in era], dict(era))
+            ).parquet(*sorted(dirs))
+            for era, dirs in sorted(eras.items())
         ]
         return frames, slow
 
@@ -1935,57 +1943,33 @@ class PartitionedParquetMergeStore:
                 # frame (or raises for an unborn store) — preserve that
                 slow.append(pval)
                 continue
-            # the entry's recorded column/type map lets every scan of
-            # this era pass an explicit schema — skipping a
-            # footer-inference driver job PER read.parquet call (a
-            # multi-commit backfill pays dozens of them). A child
-            # without a usable type record downgrades the whole era to
-            # inferred reads (None), never to a wrong schema.
-            types = state.get("types")
-            if types is not None and (
-                any(c not in types for c in cols)
-                or any(k not in types for k in self.keys)
-            ):
-                types = None
+            # the entry's recorded column/type map is the era's read
+            # schema; a child without a usable one reads on its own
+            types = state.get("types") or {}
+            if any(c not in types for c in (*cols, *self.keys)):
+                slow.append(pval)
+                continue
             era = eras.setdefault(
-                tuple(cols),
-                {"base": [], "delta": [], "dv": [], "types": types},
+                tuple((c, types[c]) for c in cols),
+                {"base": [], "delta": [], "dv": []},
             )
             era["base"].extend(base_dirs)
             era["dv"].extend(dv_dirs)
             era["delta"].extend(enumerate(delta_paths))
-            if types is None:
-                era["types"] = None
         frames: list[DataFrame] = []
-        for cols_t, grp in sorted(eras.items(), key=lambda kv: kv[0]):
-            cols = list(cols_t)
-            types = grp["types"]
-
-            def _reader(ddl: str | None):
-                return spark.read.schema(ddl) if ddl else spark.read
-
-            row_ddl = (
-                ", ".join(f"`{c}` {types[c]}" for c in cols)
-                if types
-                else None
-            )
+        for era_t, grp in sorted(eras.items(), key=lambda kv: kv[0]):
+            cols = [c for c, _ in era_t]
+            types = dict(era_t)
             base = (
-                _reader(row_ddl)
-                .parquet(*sorted(grp["base"]))
-                .select(*cols)
+                spark.read.schema(schema_ddl(cols, types)).parquet(
+                    *sorted(grp["base"])
+                )
                 if grp["base"]
                 else None
             )
             if base is not None and grp["dv"]:
-                key_ddl = (
-                    ", ".join(
-                        f"`{k}` {types[k]}" for k in self.keys
-                    )
-                    if types
-                    else None
-                )
                 dv = (
-                    _reader(key_ddl)
+                    spark.read.schema(schema_ddl(self.keys, types))
                     .parquet(*sorted(set(grp["dv"])))
                     .select(
                         *[
@@ -2007,19 +1991,14 @@ class PartitionedParquetMergeStore:
             # balanced union of per-dir frames, each tagged with its
             # position in ITS OWN child's log (the LWW order within a
             # key space — cross-child positions never compare because
-            # the window keys contain the partition columns). With a
-            # recorded type map the per-dir reads carry the explicit
-            # delta schema (cols + op), so a legacy embedded __seq is
-            # simply not read — same effect as the drop below.
-            delta_ddl = (
-                f"{row_ddl}, `{_OP}` string" if row_ddl else None
+            # the window keys contain the partition columns)
+            reader = spark.read.schema(
+                schema_ddl(cols, types, f"`{_OP}` string")
             )
-            fr = []
-            for i, p in grp["delta"]:
-                df = _reader(delta_ddl).parquet(p)
-                if _SEQ in df.columns:  # legacy log: embedded seq
-                    df = df.drop(_SEQ)
-                fr.append(df.withColumn(_SEQ, F.lit(i).cast("bigint")))
+            fr = [
+                reader.parquet(p).withColumn(_SEQ, F.lit(i).cast("bigint"))
+                for i, p in grp["delta"]
+            ]
             while len(fr) > 1:
                 fr = [
                     fr[i].unionByName(fr[i + 1])
@@ -2385,19 +2364,24 @@ class PartitionedParquetMergeStore:
             if not all(os.path.isdir(d) for d in (*dirs, *dv_dirs)):
                 slow.append(pv)
                 continue
-            era = eras.setdefault(tuple(cols), {"dirs": [], "dv": []})
+            types = child.column_types(v_c)
+            era = eras.setdefault(
+                tuple((c, types[c]) for c in cols),
+                {"dirs": [], "dv": [], "types": types},
+            )
             era["dirs"].extend(dirs)
             era["dv"].extend(dv_dirs)
         frames: list[DataFrame] = []
         key_list = list(self.keys)
-        for cols_t, grp in sorted(eras.items(), key=lambda kv: kv[0]):
-            cols = list(cols_t)
-            df = spark.read.parquet(*sorted(set(grp["dirs"]))).select(
-                *cols
+        for era_t, grp in sorted(eras.items(), key=lambda kv: kv[0]):
+            cols = [c for c, _ in era_t]
+            df = spark.read.schema(schema_ddl(cols, grp["types"])).parquet(
+                *sorted(set(grp["dirs"]))
             )
             if grp["dv"]:
                 dv = (
-                    spark.read.parquet(*sorted(set(grp["dv"])))
+                    spark.read.schema(schema_ddl(key_list, grp["types"]))
+                    .parquet(*sorted(set(grp["dv"])))
                     .select(
                         *[
                             F.col(k).alias(f"__dv_{k}")
@@ -2546,20 +2530,16 @@ class PartitionedParquetMergeStore:
         ):
             cols = list(cols_t)
             types = grp["types"]
-            ddl = ", ".join(f"`{c}` {types[c]}" for c in cols)
             base = (
-                spark.read.schema(ddl)
-                .parquet(*sorted(set(grp["base"])))
-                .select(*cols)
+                spark.read.schema(schema_ddl(cols, types)).parquet(
+                    *sorted(set(grp["base"]))
+                )
                 if grp["base"]
                 else None
             )
             if base is not None and grp["dv"]:
-                key_ddl = ", ".join(
-                    f"`{k}` {types[k]}" for k in key_list
-                )
                 dv = (
-                    spark.read.schema(key_ddl)
+                    spark.read.schema(schema_ddl(key_list, types))
                     .parquet(*sorted(set(grp["dv"])))
                     .select(
                         *[
@@ -2580,11 +2560,11 @@ class PartitionedParquetMergeStore:
                 if base is not None:
                     frames.append(base)
                 continue
-            delta_ddl = f"{ddl}, `{_OP}` string"
+            reader = spark.read.schema(
+                schema_ddl(cols, types, f"`{_OP}` string")
+            )
             fr = [
-                spark.read.schema(delta_ddl)
-                .parquet(p)
-                .withColumn(_SEQ, F.lit(i).cast("bigint"))
+                reader.parquet(p).withColumn(_SEQ, F.lit(i).cast("bigint"))
                 for i, p in grp["delta"]
             ]
             while len(fr) > 1:
@@ -2755,10 +2735,12 @@ class PartitionedParquetMergeStore:
         span (no rebucket — old keys then hash to their own
         changed_old ids under v_to, so the presence read needs no
         per-child collect), and the referenced dirs are on disk;
-        anything else falls back to the per-child diff. Deletion
-        vectors fuse: each side anti-joins the union of its
-        children's relevant DV dirs, the per-child ``_apply_dv``
-        contract era-wide.
+        anything else falls back to the per-child diff. Every fused
+        scan reads with the table's recorded types (the merge path
+        never lets a child retype a column); a table without a
+        complete record fuses nothing. Deletion vectors fuse: each
+        side anti-joins the union of its children's relevant DV dirs,
+        the per-child ``_apply_dv`` contract era-wide.
         """
         from parquet_demo_spark.sources.cdc import classify_changes
         from parquet_demo_spark.sources.merge_store import (
@@ -2767,7 +2749,10 @@ class PartitionedParquetMergeStore:
 
         cols = list(self._columns_at(v_to))
         keys = list(self.keys)
-        uniform = cols == list(self._columns_at(v_from))
+        types = self._column_types_at(v_to)
+        uniform = cols == list(self._columns_at(v_from)) and all(
+            c in types for c in cols
+        )
 
         grp = {
             "new": [],
@@ -2872,7 +2857,8 @@ class PartitionedParquetMergeStore:
             if df is None or not dv_dirs:
                 return df
             dv = (
-                spark.read.parquet(*sorted(set(dv_dirs)))
+                spark.read.schema(schema_ddl(key_list, types))
+                .parquet(*sorted(set(dv_dirs)))
                 .select(
                     *[F.col(k).alias(f"__dv_{k}") for k in key_list]
                 )
@@ -2887,7 +2873,9 @@ class PartitionedParquetMergeStore:
         def _scan(dirs: list[str], dv_key: str) -> DataFrame | None:
             if not dirs:
                 return None
-            df = spark.read.parquet(*sorted(set(dirs))).select(*cols)
+            df = spark.read.schema(schema_ddl(cols, types)).parquet(
+                *sorted(set(dirs))
+            )
             return _dv_filter(df, grp[dv_key])
 
         new = _scan(grp["new"], "dv_new")
@@ -2965,7 +2953,9 @@ class PartitionedParquetMergeStore:
         _span_append_dirs` — appends/compacts only), its entry records
         the SAME column set as the table schema at both endpoints (no
         evolution inside the span — the pre-state then needs no
-        per-child null backfill), and its appended dirs are on disk.
+        per-child null backfill), and its appended dirs are on disk;
+        the appended dirs read with the table's recorded types (a
+        table without a complete record fuses nothing).
         Ineligible children keep the per-child diff via the returned
         fallback frames; children whose span appended nothing
         contribute no rows either way and are skipped outright.
@@ -2978,7 +2968,10 @@ class PartitionedParquetMergeStore:
 
         cols = list(self._columns_at(v_to))
         keys = list(self.keys)
-        uniform = cols == list(self._columns_at(v_from))
+        types = self._column_types_at(v_to)
+        uniform = cols == list(self._columns_at(v_from)) and all(
+            c in types for c in cols
+        )
 
         fused_paths: list[list[str]] = []
         fallback: list[DataFrame] = []
@@ -3022,13 +3015,14 @@ class PartitionedParquetMergeStore:
         # per-dir seq law as _mor_era_frames — cross-child positions
         # never compare because the window keys contain the partition
         # columns)
-        fr: list[DataFrame] = []
-        for paths in fused_paths:
-            for i, p in enumerate(paths):
-                df = spark.read.parquet(p)
-                if _SEQ in df.columns:  # legacy log: embedded seq
-                    df = df.drop(_SEQ)
-                fr.append(df.withColumn(_SEQ, F.lit(i).cast("bigint")))
+        reader = spark.read.schema(
+            schema_ddl(cols, types, f"`{_OP}` string")
+        )
+        fr = [
+            reader.parquet(p).withColumn(_SEQ, F.lit(i).cast("bigint"))
+            for paths in fused_paths
+            for i, p in enumerate(paths)
+        ]
         while len(fr) > 1:
             fr = [
                 fr[i].unionByName(fr[i + 1])

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -27,3 +28,29 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def sf_smoke():
     return SF_SMOKE
+
+
+class _JobCount:
+    jobs: int | None = None
+
+
+@contextmanager
+def count_jobs(spark):
+    """Count the Spark jobs run inside the block: job-id deltas read
+    from the status tracker after draining the listener bus (a job's
+    record reaches the tracker through the bus). Yields an object
+    whose ``jobs`` is set when the block exits."""
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+
+    def _next_id(start: int) -> int:
+        bus.waitUntilEmpty(60_000)
+        while st.getJobInfo(start) is not None:
+            start += 1
+        return start
+
+    out = _JobCount()
+    first = _next_id(max(st.getJobIdsForGroup(None) or [-1]) + 1)
+    yield out
+    out.jobs = _next_id(first) - first

@@ -2202,9 +2202,9 @@ def test_shallow_clone_of_evolved_store_inherits_evolved_flag(
 ):
     """ADVICE r8 (high): cloning an EVOLVED store must carry the sticky
     evolved marker into the clone's v0. The cloned snapshot still
-    references pre-evolution bucket dirs (fewer physical columns); a
-    False flag would take _read_aligned's no-mergeSchema fast path over
-    mixed-schema dirs and either raise or silently null evolved values."""
+    references pre-evolution bucket dirs (fewer physical columns),
+    which a False flag would declare absent (the partitioned store
+    fuses only never-evolved children's scans)."""
     st = _store(tmp_path, num_buckets=2)
     # v0: two keys routed to DIFFERENT buckets, pre-evolution schema
     st.merge(
@@ -2933,10 +2933,16 @@ def test_probe_of_vacuumed_version_raises_descriptive_error(
     keys = spark.createDataFrame([Row(k=1)])
     with pytest.raises(ValueError, match="vacuumed"):
         st.probe(spark, keys, version=0)
-    # the live head still probes fine, and the stored-PK-type lookup
-    # is cached per version after the first probe (admission hot path)
-    assert [r.payload for r in st.probe(spark, keys).collect()] == ["v1"]
-    assert st.current_version() in st._pk_types_by_version
+    # the live head still probes fine, with the manifest's recorded
+    # schema: its one job is the bucket collect, no footer inference
+    from conftest import count_jobs
+
+    from parquet_demo_spark.tuning import plan_scope
+
+    with plan_scope(spark, 0), count_jobs(spark) as c:
+        df = st.probe(spark, keys)
+    assert c.jobs == 1
+    assert [r.payload for r in df.collect()] == ["v1"]
 
 
 # --- write-audit-publish (WAP) laws ----------------------------------------
